@@ -1,26 +1,23 @@
-"""Plan executor: per-table mask → dryrun count / apply staged write.
+"""Plan executor: one per-table core, two publish targets, footer counts.
 
-Rebuilds ``src/executor/executor.ts:87-147`` on Spark's immutable model:
-- dryrun (C4): compute the masked DataFrame and ``count()`` it — same affected
-  row counts the reference gets from UPDATE-under-ROLLBACK, with zero writes.
-- apply (C5): ALL tables are written to staging paths first; promotion
-  (directory rename) happens only after every staging succeeded. Any table
-  failure deletes every staging and promotes NOTHING — the all-or-nothing
-  semantics of the reference's single wrapping transaction
-  (``src/main.ts:102-111`` BEGIN…COMMIT, ROLLBACK on error). The promote
-  phase itself is crash-atomic via a manifest: the full rename list is
-  journaled to ``_promote_manifest.json`` before the first rename and
-  removed after the last, so a driver crash mid-loop is rolled FORWARD on
-  the next apply (every journaled rename is safe by construction — the
-  manifest exists only once every staging succeeded). This matches the
-  reference's single atomic ``COMMIT`` exposure, write-ahead-log style.
+Rebuilds ``src/executor/executor.ts:87-147`` on Spark's immutable model as
+ONE plan loop (``_run_plan``) for dryrun and apply:
+- dryrun (C4): mask each table and report its affected rows — the counts
+  the reference gets from UPDATE-under-ROLLBACK, with zero writes.
+- apply (C5): every table is staged into a publish target, which publishes
+  only after ALL tables staged. Any failure discards every staging and
+  publishes NOTHING — the reference's single wrapping transaction
+  (``src/main.ts:102-111`` BEGIN…COMMIT, ROLLBACK on error). The targets:
+  staged directories promoted by a journaled, crash-atomic rename
+  (``execute_plan``), and invisible files in commit-log tables published
+  by metadata-only commits (``execute_plan_versioned``).
+- No row count runs a Spark job. The mask is a pure projection, so a table
+  with ≥1 active rewrite affects all its rows: dryrun reads the source's
+  parquet footers, apply the footers of the files it wrote.
 
 100 TB posture:
 - The mask is one narrow projection — no shuffle, no Python; executors stream
   parquet in and out. Cost is IO-bound and embarrassingly parallel.
-- Dryrun counts avoid a second full read where possible: when ≥1 column is
-  rewritten the affected-row count is just the table row count, which Spark
-  answers from parquet footer statistics (no data scan).
 - Tables are independent jobs; ``parallelism`` submits them concurrently from
   a thread pool so a 1000-executor cluster isn't serialized on one table's
   tail (the reference is strictly sequential, executor.ts:104-132).
@@ -57,6 +54,9 @@ PROMOTE_MANIFEST = "_promote_manifest.json"
 #: bytes/row of masked TPC-H-ish data this lands files in the 100 MB–1 GB
 #: band object stores and downstream scans like.
 DEFAULT_MAX_RECORDS_PER_FILE = 5_000_000
+
+#: Tables masked and staged concurrently (``execute_plan``'s ``parallelism``).
+DEFAULT_PARALLELISM = 4
 
 
 @dataclass
@@ -140,15 +140,108 @@ def recover_pending_promote(output_root: Path) -> list[str]:
     return recovered
 
 
-def _execute_table(
-    catalog: ParquetCatalog,
-    planned: PlannedTable,
-    dryrun: bool,
-    output_root: Path | None,
-    max_records_per_file: int = DEFAULT_MAX_RECORDS_PER_FILE,
-) -> tuple[TableResult, Path | None]:
-    """One table's mask + (dryrun count | staged write). NEVER promotes —
-    returns the staging path so the caller can promote all-or-nothing."""
+def _footer_rows(path: str | Path) -> int:
+    """Rows of a parquet file or directory from its footers: no Spark job.
+    pyarrow skips Spark's ``_SUCCESS`` and ``.crc`` side files."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(str(path), format="parquet").count_rows()
+
+
+class _StagedDirTarget:
+    """Publish target of :func:`execute_plan`: ``_staging_*`` directories,
+    renamed to ``<table>.parquet`` under a promote journal."""
+
+    def __init__(self, output_root: Path, max_records_per_file: int):
+        self.root = output_root
+        self.max_records_per_file = max_records_per_file
+        self.staged: dict[str, Path] = {}
+
+    def stage(self, planned: PlannedTable, masked) -> int:
+        staging = self.root / f"_staging_{planned.name}_{uuid.uuid4().hex[:8]}"
+        # recorded before the write, so discard also removes a partial one
+        self.staged[planned.name] = staging
+        # File-size governance (SURVEY.md §7): cap records per output file so
+        # apply output is neither giant files nor a small-file storm.
+        masked.write.option("maxRecordsPerFile", self.max_records_per_file).mode(
+            "overwrite"
+        ).parquet(str(staging))
+        return _footer_rows(staging)
+
+    def discard(self) -> None:
+        for staging in self.staged.values():
+            shutil.rmtree(staging, ignore_errors=True)
+
+    def publish(self, tables: list[PlannedTable]) -> None:
+        promotions = [
+            (self.staged[p.name], self.root / f"{p.name}.parquet") for p in tables
+        ]
+        # Journal-then-rename: a crash anywhere in the loop is rolled forward
+        # by recover_pending_promote on the next apply. The journal itself
+        # lands atomically (temp + os.replace) so a crash mid-journal can
+        # never leave a torn manifest that blocks future applies.
+        manifest = self.root / PROMOTE_MANIFEST
+        tmp = self.root / f"{PROMOTE_MANIFEST}.tmp"
+        tmp.write_text(
+            json.dumps(
+                [
+                    {"table": final.stem, "staging": str(staging), "final": str(final)}
+                    for staging, final in promotions
+                ]
+            )
+        )
+        os.replace(tmp, manifest)
+        for staging, final in promotions:
+            _promote(staging, final)
+        manifest.unlink()
+
+
+class _VersionedTarget:
+    """Publish target of :func:`execute_plan_versioned`: invisible data
+    files in commit-log tables, then one metadata-only commit per table."""
+
+    def __init__(self, catalog: ParquetCatalog, tables_root: Path):
+        self.catalog = catalog
+        self.root = tables_root
+        self.touched: list = []
+        self.staged: dict[str, tuple] = {}
+
+    def stage(self, planned: PlannedTable, masked) -> int:
+        from database_anonymiser_spark.sources import versioned as V
+
+        t_root = self.root / planned.name
+        if (t_root / "_log").is_dir():
+            t = V.VersionedTable(self.catalog.spark, t_root)
+        else:
+            t = V.VersionedTable.create(
+                self.catalog.spark, t_root, self.catalog.read(planned.name), key_col=None
+            )
+        self.touched.append(t)
+        adds = V._write_data_files(masked, t.root, None)
+        self.staged[planned.name] = (t, adds)
+        return sum(e.num_rows for e in adds)
+
+    def discard(self) -> None:
+        for t in self.touched:
+            # grace 0: these are OUR just-staged files (single writer
+            # inside the apply run), not a concurrent writer's in-flight
+            # window
+            t.vacuum(orphan_grace_s=0)
+
+    def publish(self, tables: list[PlannedTable]) -> None:
+        from database_anonymiser_spark.sources.versioned import _commit
+
+        for planned in tables:
+            t, adds = self.staged[planned.name]
+            v = t.latest_version()
+            removes = [e["path"] for e in t._live_entries(v)]
+            _commit(t.root, v + 1, adds, removes, t.key_col(), op="anonymise")
+
+
+def _execute_table(catalog: ParquetCatalog, planned: PlannedTable, target) -> TableResult:
+    """One table's mask, then its affected-row count (dryrun, ``target``
+    None) or its staging into ``target``. NEVER publishes — the caller
+    publishes all-or-nothing."""
     res = TableResult(table=planned.table)
     try:
         masked, active, downgrades = mask_table(catalog, planned)
@@ -156,23 +249,43 @@ def _execute_table(
         if active == 0:
             # zero effective SETs → skip (query-builder.ts:54-56, executor.ts:120-124)
             res.skipped = True
-            return res, None
-        if dryrun:
-            res.rows = masked.count()
-            return res, None
-        assert output_root is not None
-        staging = output_root / f"_staging_{planned.name}_{uuid.uuid4().hex[:8]}"
-        # File-size governance (SURVEY.md §7): cap records per output file so
-        # apply output is neither giant files nor a small-file storm.
-        masked.write.option("maxRecordsPerFile", max_records_per_file).mode(
-            "overwrite"
-        ).parquet(str(staging))
-        res.rows = catalog.spark.read.parquet(str(staging)).count()
-        return res, staging
+        elif target is None:
+            # the mask is a pure projection: every source row is affected
+            res.rows = _footer_rows(catalog.table_path(planned.name))
+        else:
+            res.rows = target.stage(planned, masked)
     except Exception as e:  # per-table failure isolation, reported not swallowed
         log.exception("table %s failed", planned.table)
         res.error = f"{type(e).__name__}: {e}"
-        return res, None
+    return res
+
+
+def _run_plan(
+    catalog: ParquetCatalog, plan: Plan, target, parallelism: int
+) -> ExecutionResult:
+    """The one plan loop of dryrun and both apply targets. Tables are
+    independent, so they are submitted concurrently from a thread pool.
+    An apply publishes only when every table staged; otherwise it
+    discards every staging (main.ts:102-111 ROLLBACK)."""
+    result = ExecutionResult(mode="dryrun" if target is None else "apply")
+    with ThreadPoolExecutor(max_workers=parallelism) as pool:
+        result.tables = list(
+            pool.map(lambda t: _execute_table(catalog, t, target), plan.tables)
+        )
+    if target is not None:
+        if result.failed_tables:
+            result.rolled_back = True
+            target.discard()
+            return result
+        target.publish(
+            [p for p, tr in zip(plan.tables, result.tables) if not tr.skipped]
+        )
+    result.updated_by_table = {
+        tr.table: tr.rows
+        for tr in result.tables
+        if not tr.skipped and tr.error is None
+    }
+    return result
 
 
 def _promote(staging: Path, final: Path) -> None:
@@ -197,107 +310,35 @@ def execute_plan_versioned(
     under ``tables_root/<name>`` (created from the catalog source on first
     touch; version 0 is the pristine table). Apply commits ONE
     ``anonymise`` version per table that replaces the live set with the
-    masked rewrite; dryrun computes the same counts with ZERO commits —
-    exactly the reference's UPDATE-under-ROLLBACK (executor.ts:98-137)
-    rendered on a transaction log. A failed apply is rolled back by
-    ``restore()`` (forward, auditable), not by hoping a rename didn't land.
+    masked rewrite; dryrun is :func:`execute_plan`'s — it touches no
+    target, so it writes and commits nothing. A failed apply commits
+    nothing; a committed one is undone by ``restore()`` (forward,
+    auditable), not by hoping a rename didn't land.
 
     All-or-nothing across tables, two-phase:
     1. every table's masked data files are fully written while INVISIBLE
        (referenced by no commit) — any failure here commits nothing and
        the orphans are vacuumed on EVERY table phase 1 touched, including
-       one that failed mid-write before staging (round-5 advice: partial
-       parquet from a failed ``_write_data_files`` is an orphan too).
-       Tables first created during this run keep their committed
-       version-0 pristine copy after rollback — version 0 is a real
-       commit of the unmasked source, by design;
+       one that failed mid-write. Tables first created during this run
+       keep their committed version-0 pristine copy after rollback —
+       version 0 is a real commit of the unmasked source, by design;
     2. the per-table commits are pure metadata (one tiny exclusive-create
        each). A crash inside this window can leave a prefix committed —
        recovery is ``restore(v-1)`` per committed table; Delta itself has
        no multi-table transactions, and the window is milliseconds versus
        phase 1's hours at 100 TB.
 
-    Row counts come from the written files' parquet footers (metadata, no
-    second scan). NOTE: the log retains the pre-image until vacuumed past
-    retention — time travel to the unmasked original is the point for
-    staging-copy workflows (the reference also runs against a copy DB),
-    but production anonymisation should vacuum old versions.
+    NOTE: the log retains the pre-image until vacuumed past retention —
+    time travel to the unmasked original is the point for staging-copy
+    workflows (the reference also runs against a copy DB), but production
+    anonymisation should vacuum old versions.
     """
-    from database_anonymiser_spark.sources.versioned import (
-        VersionedTable,
-        _commit,
-        _write_data_files,
-    )
-
-    root = Path(tables_root)
-    mode = "dryrun" if dryrun else "apply"
-    result = ExecutionResult(mode=mode)
-
-    if not dryrun:
-        dry = execute_plan_versioned(catalog, plan, root, dryrun=True)
-        enforce_row_cap(dry.total_rows, cap=row_cap, force=force)
-
-    # phase 1: mask + (count | invisible write) per table
-    staged: list[tuple[PlannedTable, VersionedTable, list, int]] = []
-    touched: list[VersionedTable] = []  # every table phase 1 wrote into
-    for planned in plan.tables:
-        tr = TableResult(table=planned.table)
-        try:
-            masked, active, downgrades = mask_table(catalog, planned)
-            tr.downgrades = downgrades
-            if active == 0:
-                tr.skipped = True
-                result.tables.append(tr)
-                continue
-            if dryrun:
-                tr.rows = masked.count()
-            else:
-                t_root = root / planned.name
-                t = (
-                    VersionedTable(catalog.spark, t_root)
-                    if (t_root / "_log").is_dir()
-                    else VersionedTable.create(
-                        catalog.spark, t_root, catalog.read(planned.name), key_col=None
-                    )
-                )
-                touched.append(t)
-                adds = _write_data_files(masked, t.root, None)
-                import pyarrow.parquet as pq
-
-                tr.rows = sum(
-                    pq.ParquetFile(str(t.root / e.path)).metadata.num_rows
-                    for e in adds
-                )
-                staged.append((planned, t, adds, tr.rows))
-            result.tables.append(tr)
-        except Exception as e:
-            log.exception("table %s failed", planned.table)
-            tr.error = f"{type(e).__name__}: {e}"
-            result.tables.append(tr)
-
-    if any(tr.error is not None for tr in result.tables):
-        if not dryrun:
-            # nothing was committed; drop the invisible phase-1 files —
-            # from every table touched, not only those that finished
-            # staging (a mid-write failure leaves partial parquet too)
-            result.rolled_back = True
-            for t in touched:
-                # grace 0: these are OUR just-staged files (single
-                # writer inside the apply run), not a concurrent
-                # writer's in-flight window
-                t.vacuum(orphan_grace_s=0)
-        return result
-
-    # phase 2: metadata-only commit loop
-    for planned, t, adds, rows in staged:
-        v = t.latest_version()
-        removes = [e["path"] for e in t._live_entries(v)]
-        _commit(t.root, v + 1, adds, removes, t.key_col(), op="anonymise")
-
-    for tr in result.tables:
-        if not tr.skipped and tr.error is None:
-            result.updated_by_table[tr.table] = tr.rows
-    return result
+    dry = execute_plan(catalog, plan, dryrun=True)
+    if dryrun:
+        return dry
+    enforce_row_cap(dry.total_rows, cap=row_cap, force=force)
+    target = _VersionedTarget(catalog, Path(tables_root))
+    return _run_plan(catalog, plan, target, DEFAULT_PARALLELISM)
 
 
 def execute_plan(
@@ -307,7 +348,7 @@ def execute_plan(
     output_root: str | Path | None = None,
     row_cap: int = DEFAULT_ROW_CAP,
     force: bool = False,
-    parallelism: int = 4,
+    parallelism: int = DEFAULT_PARALLELISM,
     max_records_per_file: int = DEFAULT_MAX_RECORDS_PER_FILE,
 ) -> ExecutionResult:
     """≅ executePlan (executor.ts:87-147) with staged-write apply.
@@ -317,69 +358,14 @@ def execute_plan(
     previous crash, and journals its own promote phase so IT is
     crash-atomic too.
     """
-    mode = "dryrun" if dryrun else "apply"
-    out_root = Path(output_root) if output_root else None
-    if not dryrun:
-        if out_root is None:
-            raise ValueError("apply mode requires output_root")
-        out_root.mkdir(parents=True, exist_ok=True)
-        recover_pending_promote(out_root)
-        dry = execute_plan(catalog, plan, dryrun=True, parallelism=parallelism)
-        enforce_row_cap(dry.total_rows, cap=row_cap, force=force)
-
-    result = ExecutionResult(mode=mode)
-    if parallelism > 1 and len(plan.tables) > 1:
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            futures = [
-                pool.submit(_execute_table, catalog, t, dryrun, out_root, max_records_per_file)
-                for t in plan.tables
-            ]
-            table_results = [f.result() for f in futures]
-    else:
-        table_results = [
-            _execute_table(catalog, t, dryrun, out_root, max_records_per_file)
-            for t in plan.tables
-        ]
-
-    any_error = any(tr.error is not None for tr, _ in table_results)
-    if not dryrun and any_error:
-        # all-or-nothing (main.ts:102-111 ROLLBACK): delete every staging,
-        # promote nothing — the output root is left exactly as it was
-        result.rolled_back = True
-        for _, staging in table_results:
-            if staging is not None:
-                shutil.rmtree(staging, ignore_errors=True)
-        for tr, _ in table_results:
-            result.tables.append(tr)
-        return result
-
-    promotions: list[tuple[Path, Path]] = []
-    for (tr, staging), planned in zip(table_results, plan.tables):
-        result.tables.append(tr)
-        if tr.skipped or tr.error is not None:
-            continue
-        if not dryrun:
-            assert staging is not None and out_root is not None
-            promotions.append((staging, out_root / f"{planned.name}.parquet"))
-        result.updated_by_table[tr.table] = tr.rows
-    if promotions:
-        assert out_root is not None
-        # Journal-then-rename: a crash anywhere in the loop is rolled forward
-        # by recover_pending_promote on the next apply. The journal itself
-        # lands atomically (temp + os.replace) so a crash mid-journal can
-        # never leave a torn manifest that blocks future applies.
-        manifest = out_root / PROMOTE_MANIFEST
-        tmp = out_root / f"{PROMOTE_MANIFEST}.tmp"
-        tmp.write_text(
-            json.dumps(
-                [
-                    {"table": final.stem, "staging": str(staging), "final": str(final)}
-                    for staging, final in promotions
-                ]
-            )
-        )
-        os.replace(tmp, manifest)
-        for staging, final in promotions:
-            _promote(staging, final)
-        manifest.unlink()
-    return result
+    if dryrun:
+        return _run_plan(catalog, plan, None, parallelism)
+    if not output_root:
+        raise ValueError("apply mode requires output_root")
+    out_root = Path(output_root)
+    out_root.mkdir(parents=True, exist_ok=True)
+    recover_pending_promote(out_root)
+    dry = execute_plan(catalog, plan, dryrun=True, parallelism=parallelism)
+    enforce_row_cap(dry.total_rows, cap=row_cap, force=force)
+    target = _StagedDirTarget(out_root, max_records_per_file)
+    return _run_plan(catalog, plan, target, parallelism)

@@ -128,37 +128,9 @@ def explode_nonempty(
     must never be NULL — a NULL element would be indistinguishable from
     the empty-array marker and get dropped where plain explode keeps it.
     True for every in-repo call site (split/md5/transform outputs are
-    non-null by construction); run with ``SPARK_GRAFT_DEBUG=1`` to make
-    any violation fail the query instead of silently dropping the row.
+    non-null by construction).
     """
-    import os
-
     out = F.explode_outer(arr_col).alias(out_col)
-    if os.environ.get("SPARK_GRAFT_DEBUG") == "1":
-        # a NULL element from a NON-empty source array violates the
-        # contract (the empty/null-array marker row has size <= 0). The
-        # assertion is fused INTO the drop predicate (when/otherwise) so
-        # filter combining/reordering can neither prune it nor
-        # short-circuit past it: non-null elements keep the row, marker
-        # rows assert the source was empty and then drop.
-        return (
-            df.select(
-                *[F.col(c) for c in keep_cols],
-                F.coalesce(F.size(arr_col), F.lit(-1)).alias("_src_sz"),
-                out,
-            )
-            .where(
-                F.when(F.col(out_col).isNotNull(), F.lit(True)).otherwise(
-                    F.assert_true(
-                        F.col("_src_sz") <= 0,
-                        F.lit(
-                            f"explode_nonempty({arr_col}): NULL array element"
-                        ),
-                    ).isNotNull()
-                )
-            )
-            .drop("_src_sz")
-        )
     return df.select(*[F.col(c) for c in keep_cols], out).where(
         F.col(out_col).isNotNull()
     )

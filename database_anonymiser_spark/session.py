@@ -3,8 +3,19 @@
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def host_defaults(n_cpus: int, meminfo: str | None) -> tuple[str, str]:
+    """Local-mode ``(cores, driver heap)`` for a host with ``n_cpus`` usable
+    cores and ``meminfo`` the text of ``/proc/meminfo`` (None if unreadable):
+    every core, and min(16g, 60 % of MemTotal) — 16g when MemTotal is
+    unknown."""
+    m = re.search(r"^MemTotal:\s+(\d+) kB", meminfo or "", re.MULTILINE)
+    mem_mb = min(16384, int(m.group(1)) * 6 // 10240) if m else 16384  # kB → MB
+    return str(n_cpus), f"{mem_mb}m"
 
 
 def get_spark(
@@ -21,11 +32,21 @@ def get_spark(
     - Arrow on for any Pandas-UDF path (multimodal / similarity fallbacks).
     - shuffle partitions sized to cores locally; on a real cluster leave AQE's
       coalescing to right-size post-shuffle partitions.
+    - cores and driver heap from the host (:func:`host_defaults`), unless
+      ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` pin them.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    try:
+        with open("/proc/meminfo") as f:
+            meminfo = f.read()
+    except OSError:
+        meminfo = None
+    affinity = getattr(os, "sched_getaffinity", None)  # Linux only
+    n_cpus = len(affinity(0)) if affinity else os.cpu_count() or 1
+    host_cpus, host_mem = host_defaults(n_cpus, meminfo)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", host_cpus)
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else int(host_cpus)
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -41,10 +62,10 @@ def get_spark(
         # local mode: the driver JVM hosts ALL executor memory — 8g across
         # 32 concurrent tasks (~250 MB/task + cached frames) produced
         # measured multi-minute GC storms during pipeline cache fills
-        # (guide §5: size memory to the workload). 16g is the local
-        # default for this host class; env-overridable, and irrelevant on
-        # a real cluster where executor memory is provisioned explicitly.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # (guide §5: size memory to the workload), while a heap above the
+        # host's RAM invites the OOM killer; irrelevant on a real cluster
+        # where executor memory is provisioned explicitly.
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", host_mem))
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -59,6 +59,7 @@ import hashlib
 import json
 import math
 import os
+import threading
 import uuid
 from collections import OrderedDict
 from dataclasses import dataclass
@@ -302,8 +303,12 @@ def _list_checkpoints(root: Path) -> list[int]:
 #: that into one commit-JSON parse per NEW version — measured in the
 #: storage_churn bench as storage_meta_reads.commit_reads. Entries are
 #: shared: callers must treat file-entry dicts as read-only (they do).
+#: Every access holds _REPLAY_CACHE_LOCK: the executor stages tables
+#: from a thread pool, and an unlocked invalidate iterating the dict
+#: while another thread inserts raises "mutated during iteration".
 _REPLAY_CACHE: "OrderedDict[tuple[str, int], tuple]" = OrderedDict()
 _REPLAY_CACHE_CAP = 64
+_REPLAY_CACHE_LOCK = threading.Lock()
 
 #: opt-in debug audit (tests flip it; see merge): fail loudly when a
 #: merge touches target files containing duplicate key values instead of
@@ -380,8 +385,9 @@ def data_changing_segments(table, since: int, upto: int) -> list[tuple[int, int]
 
 def _replay_cache_invalidate(root: Path) -> None:
     key = str(root)
-    for k in [k for k in _REPLAY_CACHE if k[0] == key]:
-        _REPLAY_CACHE.pop(k, None)
+    with _REPLAY_CACHE_LOCK:
+        for k in [k for k in _REPLAY_CACHE if k[0] == key]:
+            del _REPLAY_CACHE[k]
 
 
 def _commit_sig(root: Path, version: int):
@@ -421,7 +427,8 @@ def _replay(root: Path, upto: int):
     sink (the round-6 verdict's mergeSchema cost)."""
     global COMMIT_READS
     ck = (str(root), upto)
-    hit = _REPLAY_CACHE.get(ck)
+    with _REPLAY_CACHE_LOCK:
+        hit = _REPLAY_CACHE.get(ck)
     if hit is not None:
         sig, out = hit
         # serve only while the commit file is byte-identical to when the
@@ -429,7 +436,9 @@ def _replay(root: Path, upto: int):
         # path, or a cross-process erase scrub, must not serve the old
         # table's live set)
         if sig is not None and _commit_sig(root, upto) == sig:
-            _REPLAY_CACHE.move_to_end(ck)
+            with _REPLAY_CACHE_LOCK:
+                if ck in _REPLAY_CACHE:
+                    _REPLAY_CACHE.move_to_end(ck)
             return out
         _replay_cache_invalidate(root)
     live: dict[str, dict] = {}
@@ -490,9 +499,10 @@ def _replay(root: Path, upto: int):
     if upto in versions:
         sig = _commit_sig(root, upto)
         if sig is not None:
-            _REPLAY_CACHE[ck] = (sig, out)
-            while len(_REPLAY_CACHE) > _REPLAY_CACHE_CAP:
-                _REPLAY_CACHE.popitem(last=False)
+            with _REPLAY_CACHE_LOCK:
+                _REPLAY_CACHE[ck] = (sig, out)
+                while len(_REPLAY_CACHE) > _REPLAY_CACHE_CAP:
+                    _REPLAY_CACHE.popitem(last=False)
     return out
 
 

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import subprocess
+from pathlib import Path
+
 import pytest
 
 from database_anonymiser_spark.session import get_spark
@@ -16,6 +19,36 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def _checkout_status() -> str | None:
+    """``git status`` of the checkout holding the tests; None without git
+    or a work tree."""
+    try:
+        out = subprocess.run(
+            ["git", "--no-optional-locks", "status", "--porcelain", "--untracked-files=all"],
+            cwd=Path(__file__).parent, capture_output=True, text=True, timeout=120,
+        )
+    except (OSError, subprocess.TimeoutExpired):
+        return None
+    return out.stdout if out.returncode == 0 else None
+
+
+@pytest.fixture(scope="session", autouse=True)
+def checkout_stays_clean():
+    """Tests write only under tmp dirs: the suite fails if the checkout's
+    status differs after the run (e.g. a CLI report left in the cwd)."""
+    before = _checkout_status()
+    yield
+    if before is None:
+        return
+    after = _checkout_status()
+    if after != before:
+        pytest.fail(
+            "the test run changed the checkout:\n"
+            f"before:\n{before}after:\n{after}",
+            pytrace=False,
+        )
 
 
 # ---------------------------------------------------------------------------

@@ -89,6 +89,7 @@ def test_emitted_script_equals_native_erase(spark, tmp_path):
     rc = cli_main([
         "--sqlFile", str(script), "--sqlDryrun",
         "--data", str(data_dir), "--versionedTable", f"cust={t_sql.root}",
+        "--report", str(tmp_path / "r.json"),
     ])
     assert rc == 0 and t_sql.latest_version() == v0
 
@@ -96,6 +97,7 @@ def test_emitted_script_equals_native_erase(spark, tmp_path):
     rc = cli_main([
         "--sqlFile", str(script),
         "--data", str(data_dir), "--versionedTable", f"cust={t_sql.root}",
+        "--report", str(tmp_path / "r.json"),
     ])
     assert rc == 0
     t_nat.erase("k IN (13, 40, 177)", prune={"k": (13, 177)})

@@ -293,6 +293,7 @@ def test_e2e_sql_materialized_view(spark, tmp_path):
         "--sqlFile", str(script),
         "--data", str(data_dir),
         "--versionedTable", f"sales={src_root}",
+        "--report", str(tmp_path / "r.json"),
     ])
     assert rc == 0
     mv = VersionedTable(spark, mv_root)
@@ -305,6 +306,7 @@ def test_e2e_sql_materialized_view(spark, tmp_path):
         "--data", str(data_dir),
         "--versionedTable", f"sales={src_root}",
         "--versionedTable", f"sales_by_region={mv_root}",
+        "--report", str(tmp_path / "r.json"),
     ])
     assert rc == 0
     # plain-view source refuses with the change-feed explanation
@@ -315,6 +317,7 @@ def test_e2e_sql_materialized_view(spark, tmp_path):
         f"FROM dummy GROUP BY region",
         "--data", str(data_dir),
         "--versionedTable", f"sales={src_root}",
+        "--report", str(tmp_path / "r.json"),
     ])
     assert rc == 2
 
@@ -375,6 +378,7 @@ def test_rollback_refreshes_dependent_mv(spark, src, tmp_path):
         "--data", str(data_dir),
         "--versionedTable", f"src_t={src.root}",
         "--versionedTable", f"mv={mv_root}",
+        "--report", str(tmp_path / "r.json"),
     ])
     assert rc == 2
     # the source is restored AND the view re-reflects the restored state

@@ -298,6 +298,7 @@ def test_sql_face_minmax_and_to_version(spark, tmp_path):
         "--sqlFile", str(script),
         "--data", str(data_dir),
         "--versionedTable", f"s={src_root}",
+        "--report", str(tmp_path / "r.json"),
     ])
     assert rc == 0
     mv = VersionedTable(spark, mv_loc)
@@ -597,6 +598,7 @@ def test_filtered_mv_sql_face_and_parse(spark, tmp_path):
         "--sqlFile", str(script),
         "--data", str(data_dir),
         "--versionedTable", f"s={src.root}",
+        "--report", str(tmp_path / "r.json"),
     ])
     assert rc == 0
     got = {

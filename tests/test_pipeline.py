@@ -500,6 +500,74 @@ def test_cli_versioned_purge_history(sf_dir, spark, tmp_path, monkeypatch):
         t.snapshot(0).collect()  # pristine pre-image reclaimed
 
 
+def _three_table_plan(with_ghost: bool = True):
+    """customer + supplier (+ ghost, which fails at read); supplier's REDACT
+    on a NUMBER column is a recorded type-safety downgrade."""
+    d = base_config_dict()
+    d["column_strategy"]["s_name"] = "HASH_SHA256"
+    d["rules"].append(
+        {"table": "public.supplier", "enabled": True,
+         "columns": [{"name": "s_name"}, {"name": "s_acctbal", "strategy": "REDACT"}]}
+    )
+    if with_ghost:
+        d["rules"].append(
+            {"table": "public.ghost", "enabled": True, "columns": [{"name": "c_name"}]}
+        )
+    return build_plan(config_from_dict(d))
+
+
+@pytest.mark.parametrize("target", ["staged", "versioned"])
+def test_apply_targets_share_one_core(target, catalog, spark, sf_dir, tmp_path):
+    """Both apply targets run the same table loop at parallelism 4: the
+    same dryrun counts (footer row counts, equal to a Spark count of each
+    source), skips and downgrades, the same applied rows, and the same
+    all-or-nothing rollback. A dryrun with a failing table still reports
+    the other tables' counts."""
+    from database_anonymiser_spark import executor as EX
+    from database_anonymiser_spark.sources.versioned import VersionedTable
+
+    def run(plan, root, dryrun):
+        if target == "staged":
+            return EX.execute_plan(catalog, plan, dryrun=dryrun, output_root=root,
+                                   force=True, parallelism=4)
+        return EX.execute_plan_versioned(catalog, plan, root, dryrun=dryrun, force=True)
+
+    src = {
+        f"public.{n}": spark.read.parquet(f"{sf_dir}/{n}.parquet").count()
+        for n in ("customer", "supplier")
+    }
+    plan = _three_table_plan()
+    dry = run(plan, tmp_path / "dry", dryrun=True)
+    assert not (tmp_path / "dry").exists()
+    assert dry.updated_by_table == src and not dry.rolled_back
+    assert [tr.table for tr in dry.failed_tables] == ["public.ghost"]
+    assert [tr.skipped for tr in dry.tables] == [False, False, False]
+    assert [[(g["column"], g["from"]) for g in tr.downgrades] for tr in dry.tables] == [
+        [], [("s_acctbal", "REDACT")], []
+    ]
+
+    rolled = run(plan, tmp_path / "rolled", dryrun=False)
+    assert rolled.rolled_back and rolled.updated_by_table == {}
+    assert [tr.table for tr in rolled.failed_tables] == ["public.ghost"]
+    if target == "staged":
+        assert list((tmp_path / "rolled").iterdir()) == []  # nothing promoted
+    else:
+        for name in ("customer", "supplier"):
+            t = VersionedTable(spark, tmp_path / "rolled" / name)
+            assert [h["op"] for h in t.history()] == ["create"]  # nothing committed
+            on_disk = {str(p.relative_to(t.root)) for p in (t.root / "data").rglob("*.parquet")}
+            assert on_disk == {e["path"] for e in t._live_entries()}
+
+    applied = run(_three_table_plan(with_ghost=False), tmp_path / "out", dryrun=False)
+    assert applied.updated_by_table == src and not applied.rolled_back
+    for name in ("customer", "supplier"):
+        if target == "staged":
+            out = spark.read.parquet(str(tmp_path / "out" / f"{name}.parquet"))
+        else:
+            out = VersionedTable(spark, tmp_path / "out" / name).snapshot()
+        assert out.count() == src[f"public.{name}"]
+
+
 def test_cli_audit_mode_release_gate(sf_dir, tmp_path, monkeypatch):
     """--audit (round 10): k-anonymity release gate over a table — exits
     0 with RELEASE OK when every class has >= k rows, 1 when not; the

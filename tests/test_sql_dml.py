@@ -13,6 +13,7 @@ views.
 from __future__ import annotations
 
 import json
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -217,7 +218,12 @@ def dml_env(spark, tmp_path):
 
 
 def _run(args: list[str]) -> int:
-    return cli_main(args)
+    """The CLI, with its report (default: the working directory) under a
+    temporary directory unless the test names one."""
+    if "--report" in args:
+        return cli_main(args)
+    with tempfile.TemporaryDirectory() as d:
+        return cli_main([*args, "--report", f"{d}/report.json"])
 
 
 def test_e2e_plain_describe_falls_through_to_spark_sql(dml_env):

@@ -8,6 +8,7 @@ transaction, src/main.ts:102-111 / executor.ts:98-137).
 from __future__ import annotations
 
 import json
+import tempfile
 from pathlib import Path
 
 import pytest
@@ -66,7 +67,12 @@ def txn_env(spark, tmp_path):
 
 
 def _run(args):
-    return cli_main(args)
+    """The CLI, with its report (default: the working directory) under a
+    temporary directory unless the test names one."""
+    if "--report" in args:
+        return cli_main(args)
+    with tempfile.TemporaryDirectory() as d:
+        return cli_main([*args, "--report", f"{d}/report.json"])
 
 
 def _log_count(root: Path) -> int:

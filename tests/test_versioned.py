@@ -4566,3 +4566,43 @@ def test_maintenance_commits_carry_free_operation_metrics(spark, tmp_path):
     # DV delete still reports rows_marked (existing slot)
     v = t.delete_where("k = 20", prune={"k": (20, 20)}, dv=True)
     assert t.commit_meta(v)["rows_marked"] == 1
+
+
+def test_replay_cache_is_safe_under_concurrent_invalidate(spark, tmp_path):
+    """The executor stages tables from a thread pool, so one thread can
+    invalidate a root's memoized replays while others memoize theirs:
+    no access may raise, and every replay stays correct."""
+    import sys
+    import threading
+
+    from database_anonymiser_spark.sources import versioned as V
+
+    roots = [
+        VersionedTable.create(
+            spark, tmp_path / f"t{i}",
+            spark.createDataFrame([(i, "x")], "k long, v string"), key_col="k",
+        ).root
+        for i in range(4)
+    ]
+    errors: list = []
+
+    def churn(root):
+        try:
+            for _ in range(200):
+                assert len(V._replay(root, 0)[0]) == 1
+                V._replay_cache_invalidate(root)
+        except Exception as e:  # any error is the finding
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=churn, args=(roots[i % 4],)) for i in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
